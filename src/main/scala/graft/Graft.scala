@@ -37,10 +37,12 @@ object Graft {
                          partitions: Int, queryId: String, records: Long): DataFrame =
     SkylineOps.skylineWithMetrics(ds, strategy, domain, partitions, queryId, records)
 
-  /** Batch run of the streaming barrier protocol (CSV lines + triggers). */
+  /** Batch run of the streaming barrier protocol (CSV lines + triggers):
+    * the same [[core.Barrier]] decisions as [[skylineStreamTopology]], with
+    * each partition's rows as one micro-batch. */
   def skylineStream(spark: SparkSession, dataLines: Dataset[String],
                     triggers: Seq[String], strategy: String, domain: Double,
-                    partitions: Int): Seq[streaming.SkylineStream.QueryResult] =
+                    partitions: Int): Seq[core.Barrier.QueryResult] =
     streaming.SkylineStream.runBatch(spark, dataLines, triggers, strategy,
       domain, partitions)
 
@@ -53,7 +55,7 @@ object Graft {
   /** The chained two-stage streaming topology (Spark 4 transformWithState;
     * requires the RocksDB state store provider). */
   def skylineStreamTopology(env: Dataset[streaming.SkylineStream.Envelope],
-                            partitions: Int): Dataset[streaming.SkylineStream.QueryResult] =
+                            partitions: Int): Dataset[core.Barrier.QueryResult] =
     streaming.SkylineStreamTWS.topology(env, partitions)
 
   // --- training-data pipeline --------------------------------------------

@@ -176,8 +176,8 @@ object PipelineQueries {
         val env = dataIn.toDS().flatMap(l => SkylineStream.parseData(l, pidOf))
           .unionAll(trigIn.toDS().flatMap(p =>
             SkylineStream.broadcastTrigger(p, n, 0L)))
-        // one micro-batch carries data + trigger; stepLocal orders
-        // data-before-triggers within a batch, so the bare barrier fires
+        // one micro-batch carries data + trigger; Barrier.step applies a
+        // batch's data before its triggers, so the bare barrier fires
         dataIn.addData(lines.toIndexedSeq)
         trigIn.addData("collect,0")
         runAppendStream(s,

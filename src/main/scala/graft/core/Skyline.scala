@@ -257,7 +257,9 @@ final class SkylineBuffer extends Serializable {
     // order-insensitive pairwise check. Cross-group pairs are safe: a
     // dominator of a finite-sum point has only finite or -Inf coords, and
     // -Inf-sum points sort first so finite candidates were already checked
-    // against them.
+    // against them. The result goes back in ascending-sum order (-Inf sums,
+    // then the finite walk order, then +Inf/NaN sums): the next compaction's
+    // merge walk reads `points` in that order.
     var anyNonFinite = false
     var z = 0
     while (!anyNonFinite && z < out.length) {
@@ -276,8 +278,10 @@ final class SkylineBuffer extends Serializable {
           keep.clear(); keep ++= survivors; keep += c
         }
       }
-      res ++= keep
-      res
+      val (negInf, rest) =
+        keep.partition(p => sumOf(p.values) == Double.NegativeInfinity)
+      negInf ++= res
+      negInf ++= rest
     }
     staged = new ArrayBuffer[Point]()
   }
@@ -306,6 +310,16 @@ final class SkylineBuffer extends Serializable {
 
 object SkylineBuffer {
   def empty: SkylineBuffer = new SkylineBuffer
+
+  /** A buffer holding `antichain` without re-checking it. Precondition: the
+    * points are a skyline in ascending coordinate-sum order, as `result`
+    * returns them (the next compaction's merge walk relies on that order);
+    * stored state written from `result` satisfies it. */
+  def restore(antichain: Iterator[Point]): SkylineBuffer = {
+    val buf = new SkylineBuffer
+    buf.points ++= antichain
+    buf
+  }
 
   /** Skyline of an iterator (ascending-sum bulk build: a dominator always has
     * a strictly smaller coordinate sum, so in sorted order no insert can

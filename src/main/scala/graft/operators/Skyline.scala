@@ -181,20 +181,13 @@ object SkylineOps {
           element_at(col("values"), i + 1).as(c) }: _*)
   }
 
-  /** Large-scale skyline via log-depth tree aggregation: partial per-partition
-    * skylines combine pairwise across executors instead of funneling every
-    * local skyline into one single-threaded final merge. Same fixpoint as
-    * [[skyline]]; use when local skylines are large (high-dimensional /
+  /** Skyline via log-depth tree aggregation through a spatial strategy: the
+    * local phase is keyed by the partitioner and tagged for optimality, then
+    * partial skylines combine pairwise across executors instead of funneling
+    * every local skyline into one single-threaded final merge. Same fixpoint
+    * as [[skyline]]; use when local skylines are large (high-dimensional /
     * anti-correlated data — the reference's 4-D curse-of-dimensionality case,
     * PDF §5.3). */
-  def skylineTree(ds: Dataset[Point], depth: Int = 3): Seq[Point] =
-    ds.rdd.treeAggregate(SkylineBuffer.empty)(
-      (b, p) => { b.add(p); b },
-      (a, b) => a.merge(b),
-      depth).result
-
-  /** skylineTree through a spatial strategy (local phase keyed by the
-    * partitioner, tagged for optimality, then tree-merged). */
   def skylineTreeViaStrategy(ds: Dataset[Point], strategy: String, domain: Double,
                              numPartitions: Int, depth: Int = 3): Seq[Point] = {
     implicit val pe: Encoder[Point] = ExpressionEncoder[Point]()
@@ -224,9 +217,9 @@ object SkylineOps {
     * ships over its second shuffle (`FlinkSkyline.java:171-174`), but here
     * the merge work is spread over every core instead of one reducer. If the
     * union exceeds `maxBroadcastPoints` (high-dim pathological data) it
-    * falls back to the log-depth [[skylineTree]] merge; at cluster scale the
-    * same pattern nests hierarchically (filter within executor groups
-    * first). */
+    * falls back to [[crossFilterChunks]], the distributed pairwise
+    * cross-filter over chunks of the union; at cluster scale the same
+    * pattern nests hierarchically (filter within executor groups first). */
   def skylineBroadcastFilter(ds: Dataset[Point],
                              maxBroadcastPoints: Int = 4000000): Dataset[Point] = {
     val spark = ds.sparkSession
@@ -654,11 +647,12 @@ object SkylineOps {
     * Candidate fan-out is the superset-enumeration of each cell (a cell with
     * k high bits is re-sent to 2^(d-k) cells). Measured tradeoff (bench
     * pair sky_1m_3d_gridpar / sky_1m_3d_tree_uni, plus 4-D/500k anti runs):
-    * at sizes where the candidate union fits one thread, [[skylineTree]]
-    * wins on BOTH uniform (1M/3-D: tree 0.33 s vs grid 2.1 s — the
-    * skyline is tiny, so the merge is trivial and gridpar's routing
-    * shuffle dominates) and anti-correlated data (4-D/500k: tree ~90 s vs
-    * grid ~400 s). Gridpar's value is the memory bound, not raw speed:
+    * at sizes where the candidate union fits one thread, the tree merge
+    * ([[skylineTreeViaStrategy]]) wins on BOTH uniform (1M/3-D: tree
+    * 0.33 s vs grid 2.1 s — the skyline is tiny, so the merge is trivial
+    * and gridpar's routing shuffle dominates) and anti-correlated data
+    * (4-D/500k: tree ~90 s vs grid ~400 s). Gridpar's value is the
+    * memory bound, not raw speed:
     * each of the 2^d merges sees only its subset cells' candidates, so no
     * single task ever materializes the full candidate union — the
     * property that matters once that union exceeds one executor's heap,

@@ -2,7 +2,7 @@ package graft.streaming
 
 import java.nio.file.{Files, Path, StandardOpenOption}
 
-import graft.streaming.SkylineStream.QueryResult
+import graft.core.Barrier.QueryResult
 
 /** G5: metrics-collector sink parity — one CSV row per completed query,
   * appended to a single file with the reference collector's 10-column header

@@ -4,8 +4,9 @@ import org.apache.spark.sql.{Dataset, Encoder, Encoders}
 import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
 import org.apache.spark.sql.streaming._
 
-import graft.core.{Point, SkylineBuffer}
-import graft.streaming.SkylineStream.{Envelope, LocalResult, QueryResult}
+import graft.core.{Barrier, Point, SkylineBuffer}
+import graft.core.Barrier.{LocalResult, QueryResult}
+import graft.streaming.SkylineStream.Envelope
 
 /** The reference's full two-hop streaming topology as ONE Structured
   * Streaming query, via Spark 4 `transformWithState` (RocksDB state store):
@@ -15,10 +16,10 @@ import graft.streaming.SkylineStream.{Envelope, LocalResult, QueryResult}
   *   incremental BNL merge + countdown latch, A3] ─ QueryResult
   *
   * This is the chained keyed-stage shape of the reference
-  * (`java/org.main/FlinkSkyline.java:138-183`) that the older
-  * `flatMapGroupsWithState` API could not express in a single query (it
-  * cannot be chained); `transformWithState` can, so the global merge runs
-  * as a distributed stateful operator instead of a driver-side accumulator.
+  * (`java/org.main/FlinkSkyline.java:138-183`): the global merge runs as a
+  * distributed stateful operator, not a driver-side accumulator. The
+  * processors own state storage only; every protocol decision is a call into
+  * [[Barrier]].
   */
 object SkylineStreamTWS {
 
@@ -35,11 +36,10 @@ object SkylineStreamTWS {
   case class LocalScalars(maxSeenId: Long, pending: Seq[(String, Long)],
                           startMs: Long, cpuNanos: Long, nUncompacted: Int)
 
-  /** A1+A2: local BNL skyline + barrier/trigger state machine, keyed by
-    * spatial partition id. Same state transitions as
-    * [[SkylineStream.stepLocal]] (the flatMapGroupsWithState shell), but
-    * with the antichain SPLIT OUT of the scalar value state into a
-    * RocksDB ListState and maintained lazily:
+  /** A1+A2: local BNL skyline + barrier, keyed by spatial partition id. The
+    * barrier decisions are [[Barrier.step]]; this shell stores the antichain
+    * SPLIT OUT of the scalar value state into a RocksDB ListState and
+    * maintains it lazily:
     *
     *  - a data-only micro-batch APPENDS its points to the list (O(batch)
     *    writes) instead of restoring + re-inserting + rewriting the whole
@@ -57,7 +57,7 @@ object SkylineStreamTWS {
     @transient private var sc: ValueState[LocalScalars] = _
 
     override def init(outputMode: OutputMode, timeMode: TimeMode): Unit = {
-      // fresh handle names ("local" held the old monolithic LocalState):
+      // fresh handle names ("local" held an older monolithic state):
       // a pre-split checkpoint restarts with fresh state instead of
       // crashing on a state-schema mismatch. CAVEAT — "fresh" means the
       // old antichain/barrier state is silently DISCARDED, which for an
@@ -74,56 +74,45 @@ object SkylineStreamTWS {
     override def handleInputRows(pid: Int, rows: Iterator[Envelope],
                                  tv: TimerValues): Iterator[LocalResult] = {
       val t0 = System.nanoTime()
-      val st = if (sc.exists()) sc.get() else LocalScalars(-1L, Nil, 0L, 0L, 0)
-      var maxId = st.maxSeenId
-      var startMs = st.startMs
-      // data before triggers within the batch (deterministic barrier
-      // semantics, like stepLocal)
+      val now = System.currentTimeMillis()
+      val sc0 = if (sc.exists()) sc.get() else LocalScalars(-1L, Nil, 0L, 0L, 0)
       val (data, triggers) = rows.toSeq.partition(_.kind == 0)
-      if (data.nonEmpty) {
-        if (startMs == 0L) startMs = System.currentTimeMillis()
-        val pts = new Array[Point](data.length)
-        var i = 0
-        data.foreach { e =>
-          if (e.id > maxId) maxId = e.id
-          pts(i) = Point(e.id, e.values); i += 1
-        }
-        sky.appendList(pts)
-      }
-      // parked queries re-check only when new data moved the barrier
-      val (ready, parked) =
-        if (data.nonEmpty)
-          st.pending.partition { case (pl, _) =>
-            maxId >= SkylineStream.requiredCount(pl) }
-        else (Nil, st.pending)
-      // new triggers: fire if barrier satisfied or partition empty
-      // (maxId == -1, reference parity — see stepLocal)
-      val (fireNow, parkNew) = triggers.partition(e =>
-        maxId >= SkylineStream.requiredCount(e.payload) || maxId == -1L)
-      val pending = parked ++ parkNew.map(e => (e.payload, e.dispatchMs))
-      val nUnc = st.nUncompacted + data.length
-      val mustFire = ready.nonEmpty || fireNow.nonEmpty
+      val (answers, st) = Barrier.step(
+        Barrier.State(sc0.maxSeenId, sc0.pending, sc0.startMs),
+        data.map(_.id), triggers.map(e => (e.payload, e.dispatchMs)), now)
+      if (data.nonEmpty)
+        sky.appendList(data.map(e => Point(e.id, e.values)).toArray)
+      val nUnc = sc0.nUncompacted + data.length
       var compacted: Seq[Point] = Nil
       var nUncOut = nUnc
-      if (mustFire || nUnc >= compactLimit) {
+      if (answers.nonEmpty || nUnc >= compactLimit) {
         compacted = SkylineBuffer.of(sky.get()).result
-        // ListState.put rejects empty arrays (Spark 4 contract)
-        if (compacted.nonEmpty) sky.put(compacted.toArray) else sky.clear()
+        replace(sky, compacted)
         nUncOut = 0
       }
-      val cpu = st.cpuNanos + (System.nanoTime() - t0)
-      sc.update(LocalScalars(maxId, pending, startMs, cpu, nUncOut))
-      if (!mustFire) Iterator.empty
-      else {
-        val pts = compacted.map(_.copy(originPartition = pid))
-        val start = if (startMs == 0L) System.currentTimeMillis() else startMs
-        val cpuMs = cpu / 1000000L
-        (ready.iterator.map { case (pl, dm) =>
-          LocalResult(pid, pl, dm, start, pts, cpuMs) } ++
-          fireNow.iterator.map(e =>
-            LocalResult(pid, e.payload, e.dispatchMs, start, pts, cpuMs)))
-      }
+      val cpu = sc0.cpuNanos + (System.nanoTime() - t0)
+      sc.update(LocalScalars(st.maxSeenId, st.pending, st.startMs, cpu, nUncOut))
+      SkylineStream.localResults(pid, answers, st.start(now), compacted,
+        cpu / 1000000L)
     }
+  }
+
+  /** Stores `pts` as the whole list; ListState.put rejects empty arrays
+    * (Spark 4 contract), so an empty antichain clears it. */
+  private def replace(list: ListState[Point], pts: Seq[Point]): Unit =
+    if (pts.nonEmpty) list.put(pts.toArray) else list.clear()
+
+  /** Admits `rows` into latch `l` ([[Barrier.admit]]), merging each admitted
+    * partition's local skyline into the stored global antichain `buf`. */
+  private def admitAll(l: Barrier.Latch, buf: ListState[Point],
+                       rows: Iterator[LocalResult]): (Barrier.Latch, SkylineBuffer) = {
+    val sky = SkylineBuffer.restore(buf.get())
+    val filled = rows.foldLeft(l)((l, r) =>
+      Barrier.admit(l, r, System.currentTimeMillis()) match {
+        case Some(admitted) => r.skyline.foreach(sky.insert); admitted
+        case None => l
+      })
+    (filled, sky)
   }
 
   /** A3: global skyline merge + countdown latch, keyed by query payload.
@@ -143,60 +132,33 @@ object SkylineStreamTWS {
 
     override def handleInputRows(payload: String, rows: Iterator[LocalResult],
                                  tv: TimerValues): Iterator[QueryResult] = {
-      var m = if (meta.exists()) meta.get()
-        else GlobalMeta(0, Long.MaxValue, 0L, 0L, 0L, Nil)
-      val sky = new SkylineBuffer
-      buf.get().foreach(p => sky.points += p)  // restore merged antichain
-      rows.foreach { r =>
-        // distinct-pid latch: a duplicated trigger payload makes partitions
-        // answer twice; counting raw arrivals would fill the latch early
-        // (dropping slow partitions) and double-merge antichains
-        if (!m.localSizes.exists(_._1 == r.pid)) {
-          m = GlobalMeta(m.arrived + 1,
-            math.min(m.minStart, r.startMs), System.currentTimeMillis(),
-            math.max(m.maxCpu, r.cpuMs), r.dispatchMs,
-            m.localSizes :+ (r.pid -> r.skyline.size))
-          r.skyline.foreach(sky.insert)
-        }
+      val stored = if (!meta.exists()) Barrier.EmptyLatch else {
+        val m = meta.get()
+        Barrier.Latch(m.minStart, m.lastArrival, m.maxCpu, m.dispatchMs, m.localSizes)
       }
-      if (m.arrived >= totalPartitions) {
-        val finish = System.currentTimeMillis()
-        val global = sky.result
-        val survivors = global.groupBy(_.originPartition).view.mapValues(_.size)
-        val sizesByPid = m.localSizes.toMap
-        val sumRatios = (0 until totalPartitions).map { i =>
-          sizesByPid.get(i) match {
-            case Some(sz) if sz > 0 => survivors.getOrElse(i, 0).toDouble / sz
-            case _ => 0.0
-          }
-        }.sum
-        val parts = payload.split(",")
-        val mapWall = math.max(0L, m.lastArrival - m.minStart)
+      val (l, sky) = admitAll(stored, buf, rows)
+      if (l.arrived >= totalPartitions) {
+        val result = Barrier.complete(payload, l, sky.result, totalPartitions,
+          System.currentTimeMillis())
         buf.clear(); meta.clear()
-        Iterator.single(QueryResult(parts(0),
-          if (parts.length > 1) parts(1).trim else "unknown",
-          global.size, sumRatios / totalPartitions,
-          math.max(0L, mapWall - m.maxCpu), m.maxCpu,
-          finish - m.lastArrival, finish - m.minStart))
+        Iterator.single(result)
       } else {
-        // ListState.put rejects empty arrays (Spark 4 contract): a latch
-        // fed only empty-partition answers so far has nothing to store
-        val merged = sky.result
-        if (merged.nonEmpty) buf.put(merged.toArray) else buf.clear()
-        meta.update(m)
+        replace(buf, sky.result)
+        meta.update(GlobalMeta(l.arrived, l.minStart, l.lastArrival, l.maxCpu,
+          l.dispatchMs, l.localSizes))
         Iterator.empty
       }
     }
   }
 
-  /** Like [[GlobalProcessor]] but emits the merged global skyline POINTS at
-    * latch-fill (for oracle-checking the chained topology against the batch
-    * skyline SQL; the reference's suppressed-payload emission path,
-    * `FlinkSkyline.java:643-646`, behind its output flag). */
   /** Distinct partitions already counted toward a query's latch (duplicate
     * trigger payloads make partitions answer more than once). */
   case class ArrivedPids(pids: Seq[Int])
 
+  /** Like [[GlobalProcessor]] but emits the merged global skyline POINTS at
+    * latch-fill (for oracle-checking the chained topology against the batch
+    * skyline SQL; the reference's suppressed-payload emission path,
+    * `FlinkSkyline.java:643-646`, behind its output flag). */
   class GlobalPointsProcessor(totalPartitions: Int)
       extends StatefulProcessor[String, LocalResult, Point] {
     @transient private var buf: ListState[Point] = _
@@ -215,24 +177,16 @@ object SkylineStreamTWS {
 
     override def handleInputRows(payload: String, rows: Iterator[LocalResult],
                                  tv: TimerValues): Iterator[Point] = {
-      var pids = if (arrived.exists()) arrived.get().pids else Nil
-      val sky = new SkylineBuffer
-      buf.get().foreach(p => sky.points += p)
-      rows.foreach { r =>
-        // distinct-pid latch; see GlobalProcessor
-        if (!pids.contains(r.pid)) {
-          pids = pids :+ r.pid
-          r.skyline.foreach(sky.insert)
-        }
-      }
-      if (pids.size >= totalPartitions) {
+      // only the latch's partitions are stored; sizes and times go unused
+      val stored = if (!arrived.exists()) Barrier.EmptyLatch
+        else Barrier.EmptyLatch.copy(localSizes = arrived.get().pids.map(_ -> 0))
+      val (l, sky) = admitAll(stored, buf, rows)
+      if (l.arrived >= totalPartitions) {
         buf.clear(); arrived.clear()
         sky.result.iterator
       } else {
-        // ListState.put rejects empty arrays (Spark 4 contract)
-        val merged = sky.result
-        if (merged.nonEmpty) buf.put(merged.toArray) else buf.clear()
-        arrived.update(ArrivedPids(pids))
+        replace(buf, sky.result)
+        arrived.update(ArrivedPids(l.localSizes.map(_._1)))
         Iterator.empty
       }
     }

@@ -106,12 +106,12 @@ object StreamMain {
       case _ =>
         results.writeStream
           .foreachBatch {
-            (batch: org.apache.spark.sql.Dataset[SkylineStream.QueryResult],
+            (batch: org.apache.spark.sql.Dataset[graft.core.Barrier.QueryResult],
              _: Long) =>
               batch.collect().foreach { r =>
                 opts.get("out") match {
                   case Some(dir) =>
-                    val f = java.nio.file.Paths.get(dir, s"query_${r.queryId}.json")
+                    val f = resultFile(dir, r.queryId)
                     java.nio.file.Files.createDirectories(f.getParent)
                     java.nio.file.Files.writeString(f, r.toJson + "\n")
                   case None => println(r.toJson)
@@ -127,4 +127,12 @@ object StreamMain {
       .trigger(trigger)
       .start()
   }
+
+  /** The file the `--out` sink writes a query's JSON to. The query id comes
+    * from the trigger payload, which is outside input, so it is URL-encoded:
+    * no path separator survives, and the file stays inside `dir`. */
+  private[streaming] def resultFile(dir: String, queryId: String): java.nio.file.Path =
+    java.nio.file.Paths.get(dir, "query_" +
+      java.net.URLEncoder.encode(queryId, java.nio.charset.StandardCharsets.UTF_8) +
+      ".json")
 }

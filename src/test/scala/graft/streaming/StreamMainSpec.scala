@@ -126,4 +126,16 @@ class StreamMainSpec extends AnyFunSuite {
       }
     }
   }
+
+  test("a query id cannot steer the --out result file outside its directory") {
+    val dir = java.nio.file.Files.createTempDirectory("sm_ids")
+    for (id <- Seq("a/../../x", "..", "a\\b", "../" * 3 + "etc")) {
+      val f = StreamMain.resultFile(dir.toString, id)
+      assert(f.getParent == dir, id)
+      assert(f.getFileName.toString.startsWith("query_"), id)
+      assert(f.normalize.getParent == dir, id)
+    }
+    // plain ids keep the name the metrics tooling reads
+    assert(StreamMain.resultFile(dir.toString, "7") == dir.resolve("query_7.json"))
+  }
 }
